@@ -66,8 +66,10 @@ behavior, executed.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
+import threading
 import time
 import uuid
 from collections import OrderedDict
@@ -92,12 +94,17 @@ MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 STATS_DIR = "_stats"
 
+_log = logging.getLogger(__name__)
+
 #: Session-wide memo of parquet RELATIONS (immutable plans over
-#: immutable committed path-sets) keyed on (applicationId, basePath,
-#: path-tuple) -- see :meth:`SnapshotStore._read_parquet`.  LRU-bounded;
-#: holds plan objects only, never rows or results.
+#: immutable committed path-sets) keyed on (applicationId, session,
+#: basePath, path-tuple) -- see :meth:`SnapshotStore._read_parquet`.
+#: LRU-bounded; holds plan objects only, never rows or results.  Every
+#: access holds ``_PQ_PLAN_LOCK``: reads may run on several threads (a
+#: threaded bench harness) while ``clear_persist_caches`` clears it.
 _PQ_PLAN_MEMO: OrderedDict = OrderedDict()
 _PQ_PLAN_MEMO_MAX = 512
+_PQ_PLAN_LOCK = threading.Lock()
 #: Per-commit file count above which write() stores the per-file
 #: zone-map/bloom rows in an executor-written PARQUET SIDECAR instead
 #: of inline JSON collected to the driver.  Below it the inline path
@@ -592,7 +599,8 @@ def _caller_arranged_layout(df: DataFrame) -> bool:
     untouched, while a frame that is merely task-scattered by whatever
     scan/join/aggregate produced it gains a spec-keyed rebalance.
     Returns True (= leave the frame alone) whenever the plan cannot be
-    inspected -- never cluster on a guess."""
+    inspected -- never cluster on a guess; such failures are counted
+    in :data:`LAYOUT_PROBE_FAILURES` and logged once per session."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         for _ in range(64):
@@ -610,9 +618,35 @@ def _caller_arranged_layout(df: DataFrame) -> bool:
                 # repartition underneath can masquerade as arranged.
                 return False
             plan = plan.children().apply(0)
-    except Exception:  # noqa: BLE001 -- Connect frames, plan API drift
-        pass
+    except Exception as exc:  # noqa: BLE001 -- Connect frames, plan API drift
+        _layout_probe_failed(df, exc)
     return True
+
+
+#: Plan-inspection failures of :func:`_caller_arranged_layout` per
+#: session (``id`` of the frame's SparkSession): each one left a frame
+#: unclustered because its layout could not be read.
+LAYOUT_PROBE_FAILURES: dict[int | None, int] = {}
+_LAYOUT_PROBE_LOCK = threading.Lock()
+
+
+def _layout_probe_failed(df, exc: Exception) -> None:
+    """Count a failed layout probe; log the first one of each session."""
+    try:
+        session = id(df.sparkSession)
+    except Exception:  # noqa: BLE001 -- the frame may be as broken as its plan
+        session = None
+    with _LAYOUT_PROBE_LOCK:
+        n = LAYOUT_PROBE_FAILURES.get(session, 0) + 1
+        LAYOUT_PROBE_FAILURES[session] = n
+    if n == 1:
+        _log.warning(
+            "cannot inspect the plan of a partitioned write (%s: %s); "
+            "writing it without the partition-spec rebalance. Later "
+            "failures in this session are only counted.",
+            type(exc).__name__,
+            exc,
+        )
 
 
 def _apply_transforms(df: DataFrame, transforms: dict) -> DataFrame:
@@ -791,13 +825,15 @@ class SnapshotStore:
         reads and computes from the parquet files."""
         key = (
             self.spark.sparkContext.applicationId,
+            self.spark,  # sessions of one application differ in conf
             base_path,
             tuple(paths),
         )
-        plan = _PQ_PLAN_MEMO.get(key)
-        if plan is not None:
-            _PQ_PLAN_MEMO.move_to_end(key)
-            return plan
+        with _PQ_PLAN_LOCK:
+            plan = _PQ_PLAN_MEMO.get(key)
+            if plan is not None:
+                _PQ_PLAN_MEMO.move_to_end(key)
+                return plan
         memo = self.__dict__.setdefault("_pq_schema_memo", {})
         reader = self.spark.read
         if base_path is not None:
@@ -810,9 +846,10 @@ class SnapshotStore:
         else:
             df = reader.parquet(*paths)
             memo[key] = df.schema
-        _PQ_PLAN_MEMO[key] = df
-        while len(_PQ_PLAN_MEMO) > _PQ_PLAN_MEMO_MAX:
-            _PQ_PLAN_MEMO.popitem(last=False)
+        with _PQ_PLAN_LOCK:
+            _PQ_PLAN_MEMO[key] = df
+            while len(_PQ_PLAN_MEMO) > _PQ_PLAN_MEMO_MAX:
+                _PQ_PLAN_MEMO.popitem(last=False)
         return df
 
     def _declared_dir_schema(self, vd: str, parts):

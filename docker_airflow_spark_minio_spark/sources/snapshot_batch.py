@@ -65,7 +65,8 @@ opt-in restriction can be lifted.  Until then:
   statements.
 
 Execution mirrors :meth:`SnapshotStore.read` semantics file-by-file:
-one input partition per surviving data file (executors scan in
+one scan task per surviving data file, packed in plan order into at
+most one input partition per core (executors scan the runs in
 parallel, Arrow batches, data never routes through the driver),
 field-id schema evolution resolved per directory epoch
 (:func:`~..snapshots._epoch_fields`), merge-on-read equality AND
@@ -75,11 +76,12 @@ is bounded; a cluster deployment would broadcast them instead).
 
 Scale note (100 TB posture): planning cost is O(matching manifest
 shards + surviving files), the same as the API path; execution is one
-task per file.  The Python DataSource API has no column-pruning hook
-(filters only), so Spark's own projection cannot reach the source;
-instead the ``columns`` READER OPTION projects at the source (only the
-named columns decode and surface -- option-filter and delete-key
-columns still decode for masking, then drop), and
+Spark task per run of files, at most one run per core.  The Python
+DataSource API has no column-pruning hook (filters only), so Spark's
+own projection cannot reach the source; instead the ``columns`` READER
+OPTION projects at the source (only the named columns decode and
+surface -- option-filter and delete-key columns still decode for
+masking, then drop), and
 :func:`~..streaming.table_source.snapshot_sql` INFERS it per statement
 from the referenced identifiers (conservative: a ``*`` outside
 ``COUNT(*)`` disables pruning).  Independent of projection, tasks
@@ -550,9 +552,9 @@ def _read_delete_set(path: str):
 #: DataSource API allows.  Tasks then materialize the frame from
 #: memory (zero disk IO per worker process); sets above the cap stay
 #: path-referenced and served by the per-process cache.  The caps are
-#: deliberately small: every task's pickled partition carries its own
-#: copy of the ctx (the API has no shared-broadcast hook), so a large
-#: inline set would multiply across the plan.
+#: deliberately small: every input partition (a run of files) carries
+#: its own copy of the ctx (the API has no shared-broadcast hook), so a
+#: large inline set would multiply across the plan.
 INLINE_DELETE_SET_BYTES = 256 * 1024
 INLINE_DELETE_TOTAL_BYTES = 1024 * 1024
 
@@ -732,9 +734,49 @@ def parse_partition_value(raw: str | None, t, tz: str):
 # ---------------------------------------------------------------------------
 
 
-class _BatchFilePartition(InputPartition):
+class _TaskRun(InputPartition):
+    """One Spark task's input: a contiguous run of per-file scan tasks,
+    read in order by one ``read()`` call.  A Python DataSource task
+    costs about 0.25 CPU-s whatever it reads (worker hand-off, unpickle,
+    Arrow stream set-up), so the planners pack their per-file tasks
+    into at most one run per core (:func:`pack_runs`).  The file tasks
+    of a plan share their table context by reference, and pickle
+    memoizes shared objects, so the context is written once per run."""
+
+    def __init__(self, tasks: list):
+        self.tasks = tasks
+
+
+def pack_runs(tasks: list) -> list[_TaskRun]:
+    """Split ``tasks`` (objects with a ``path``), in order, into at most
+    ``min(len(tasks), cores)`` contiguous runs of roughly equal bytes.
+    The count comes from the planner process's CPU affinity: planning
+    runs in a Python worker without a SparkContext to ask."""
+    n = min(len(tasks), len(os.sched_getaffinity(0)))
+    weights = [max(os.path.getsize(t.path), 1) for t in tasks]
+    rest = sum(weights)  # bytes not yet in a closed run
+    runs: list[_TaskRun] = []
+    cur: list = []
+    acc = 0
+    for i, (t, w) in enumerate(zip(tasks, weights)):
+        cur.append(t)
+        acc += w
+        left = n - len(runs) - 1  # runs still to open after this one
+        if left and (
+            acc * (left + 1) >= rest  # this run has its share
+            or len(tasks) - i - 1 == left  # one file per remaining run
+        ):
+            runs.append(_TaskRun(cur))
+            rest -= acc
+            cur, acc = [], 0
+    if cur:
+        runs.append(_TaskRun(cur))
+    return runs
+
+
+class _BatchFilePartition:
     """One data file's scan task: everything the executor needs,
-    primitives only (pickled per task)."""
+    primitives only.  Spark reads it inside a :class:`_TaskRun`."""
 
     def __init__(
         self,
@@ -1004,7 +1046,7 @@ class SnapshotTableBatchReader(DataSourceReader):
                     fh,
                     default=str,
                 )
-        return parts
+        return pack_runs(parts)
 
     @staticmethod
     def _apply_exact_filters(tab, ctx):
@@ -1037,7 +1079,13 @@ class SnapshotTableBatchReader(DataSourceReader):
 
     # -- execution (executor-side, pyarrow) -----------------------------------
 
-    def read(self, partition: _BatchFilePartition):
+    def read(self, run: _TaskRun | None):
+        if run is None:
+            return  # Spark's stand-in partition for an empty plan
+        for task in run.tasks:
+            yield from self._read_file(task)
+
+    def _read_file(self, partition: _BatchFilePartition):
         import pyarrow as pa
         import pyarrow.parquet as pq
 

@@ -6,13 +6,14 @@ micro-batches -- the Iceberg streaming-read parity surface
 batch side consumes via :meth:`~..snapshots.SnapshotStore.read_appends`.
 
 Offsets ARE table versions: a micro-batch covers the published window
-``(start, end]``, with one input partition per data FILE so executors
-scan the window in parallel (pyarrow, Arrow-batch handoff -- the data
-never routes through the driver; only manifest JSON does, O(window
-commits)).  Spark's checkpoint persists the version cursor, so
-kill-replay re-plans exactly the same window -- deterministic
-partitions() + append-only data make replay exactly-once without any
-sink-side guard.
+``(start, end]``, planned as one scan task per data FILE; the window's
+tasks are packed in order into at most one input partition per core,
+so executors scan it in parallel without paying a Python task per file
+(pyarrow, Arrow-batch handoff -- the data never routes through the
+driver; only manifest JSON does, O(window commits)).  Spark's
+checkpoint persists the version cursor, so kill-replay re-plans
+exactly the same window -- deterministic partitions() + append-only
+data make replay exactly-once without any sink-side guard.
 
 Append-only contract (same as Iceberg's streaming read, which fails on
 replace snapshots and is the reason its docs steer streaming tables to
@@ -83,11 +84,7 @@ import os
 import re
 from urllib.parse import unquote
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from ..snapshots import SnapshotStore, _vdir_version
@@ -96,8 +93,10 @@ from ..sources.snapshot_batch import (
     SnapshotTableBatchReader,
     SnapshotTablePushdownReader,
     _stored_names,
+    _TaskRun,
     arrow_type,
     check_local_root as _check_local_root,
+    pack_runs,
     parse_partition_value,
 )
 
@@ -159,7 +158,12 @@ def _added_vdirs(root: str, m: dict, v: int) -> set[str]:
     }
 
 
-class _FilePartition(InputPartition):
+class _FilePartition:
+    """One data file's scan task -- the unit of offsets, slicing and
+    masks.  Spark reads it inside a :class:`_TaskRun` with the other
+    files of its run; the schema fields are shared references, so
+    pickling the run writes them once."""
+
     def __init__(
         self,
         path: str,
@@ -363,7 +367,7 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
             a = k1 if v == v1 else 0
             b = k2 if v == v2 else len(tasks)
             parts.extend(tasks[a:b])
-        return parts
+        return pack_runs(parts)
 
     def _dir_partitions(
         self, vdirs: list[str], change: tuple | None
@@ -653,7 +657,11 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         return parts
 
     # -- execution (executor-side, pyarrow) --------------------------------
-    def read(self, partition: _FilePartition):
+    def read(self, run: _TaskRun):
+        for task in run.tasks:
+            yield from self._read_file(task)
+
+    def _read_file(self, partition: _FilePartition):
         import pyarrow as pa
         import pyarrow.parquet as pq
 

@@ -252,9 +252,10 @@ def clear_persist_caches() -> None:
         # attempt-unique vdir uuids so cross-sweep hits cannot happen,
         # but clear it anyway -- sweep independence should not rest on
         # an argument
-        from ..snapshots import _PQ_PLAN_MEMO
+        from ..snapshots import _PQ_PLAN_LOCK, _PQ_PLAN_MEMO
 
-        _PQ_PLAN_MEMO.clear()
+        with _PQ_PLAN_LOCK:
+            _PQ_PLAN_MEMO.clear()
 
 # Lazy table plans per (session, sf_dir).  Re-deriving them costs a
 # parquet footer/schema analysis per table per query -- ~1s of driver

@@ -62,3 +62,69 @@ def test_table_plan_cache_is_bounded(spark):
     for i in range(12):
         base.load_tables(spark, SF_A + "/" * i)
     assert len(base._TABLE_CACHE) <= 8
+
+
+def test_parquet_plan_memo_threaded_get_evict(spark, tmp_path, monkeypatch):
+    """The session-wide relation memo is read, LRU-bumped, evicted and
+    cleared from several threads at once (a threaded harness plus
+    clear_persist_caches): no access may race another, and a relation
+    is only ever served to the session that built it."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from docker_airflow_spark_minio_spark import snapshots
+    from docker_airflow_spark_minio_spark.snapshots import SnapshotStore
+
+    paths = []
+    for i in range(6):
+        d = tmp_path / f"d{i}"
+        d.mkdir()
+        pq.write_table(pa.table({"x": [i]}), str(d / "part-0.parquet"))
+        paths.append(str(d))
+    declared = T.StructType([T.StructField("x", T.LongType())])
+    store = SnapshotStore(spark, str(tmp_path / "t"))
+    monkeypatch.setattr(snapshots, "_PQ_PLAN_MEMO_MAX", 2)
+
+    errors: list[BaseException] = []
+
+    def reader(seed: int) -> None:
+        try:
+            for j in range(24):
+                p = paths[(seed + j) % len(paths)]
+                df = store._read_parquet([p], declared=declared)
+                assert df.schema == declared
+        except BaseException as exc:  # noqa: BLE001 -- reported below
+            errors.append(exc)
+
+    def clearer() -> None:
+        try:
+            for _ in range(40):
+                base.clear_persist_caches()
+        except BaseException as exc:  # noqa: BLE001 -- reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=reader, args=(i,)) for i in range(8)
+        ] + [threading.Thread(target=clearer)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(snapshots._PQ_PLAN_MEMO) <= 2
+
+    # the session is part of the key: a sibling session builds its own
+    other = SnapshotStore(spark.newSession(), str(tmp_path / "t"))
+    mine = store._read_parquet([paths[0]], declared=declared)
+    assert store._read_parquet([paths[0]], declared=declared) is mine
+    assert other._read_parquet([paths[0]], declared=declared) is not mine

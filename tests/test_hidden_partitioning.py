@@ -450,3 +450,34 @@ def test_incidental_spread_repartition_still_clusters(spark, tmp_path):
     # the spec-keyed rebalance (AQE may coalesce below |values|)
     assert n_files(root) <= 16, n_files(root)
     assert s.read().count() == 4000
+
+
+def test_layout_probe_failure_is_logged_once_and_counted(
+    spark, caplog, monkeypatch
+):
+    """A frame whose plan cannot be inspected fails closed (treated as
+    caller-arranged, so the write leaves it unclustered) -- and that
+    fallback is visible: counted every time, logged once per session."""
+    import logging
+
+    from docker_airflow_spark_minio_spark import snapshots
+
+    class _OpaqueFrame:
+        sparkSession = spark
+
+        @property
+        def _jdf(self):
+            raise RuntimeError("plan API drift")
+
+    key = id(spark)
+    monkeypatch.delitem(snapshots.LAYOUT_PROBE_FAILURES, key, raising=False)
+    with caplog.at_level(logging.WARNING, logger=snapshots.__name__):
+        assert snapshots._caller_arranged_layout(_OpaqueFrame())
+        assert snapshots._caller_arranged_layout(_OpaqueFrame())
+    assert snapshots.LAYOUT_PROBE_FAILURES[key] == 2
+    logged = [
+        r.getMessage()
+        for r in caplog.records
+        if "cannot inspect the plan" in r.getMessage()
+    ]
+    assert len(logged) == 1 and "plan API drift" in logged[0]

@@ -712,7 +712,7 @@ def test_small_delete_sets_inline_in_task_payload(spark, tmp_path, monkeypatch):
     parts = reader.partitions()
     # every set was materialized exactly once, at plan time
     assert len(reads) == 2
-    for d in parts[0].ctx["delete_sets"]:
+    for d in parts[0].tasks[0].ctx["delete_sets"]:
         assert d.get("inline_ipc"), d["dir"]
 
     # tasks never touch the delete parquet again: disk reads now fail

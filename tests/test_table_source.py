@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from docker_airflow_spark_minio_spark.snapshots import SnapshotStore
 from docker_airflow_spark_minio_spark.streaming.table_source import (
+    SnapshotTableStreamReader,
     SnapshotTableStreamSource,
 )
 
@@ -264,6 +265,9 @@ def test_table_source_file_rate_limited_fat_commit(registered, tmp_path):
     assert sorted(delivered) == list(range(16))       # exactly once
     nonempty = [b for b in batches if b]
     assert len(nonempty) >= 2, f"fat commit did not split: {batches}"
+    # windows advance by FILES (3 per batch), not by packed runs
+    n_files = len(SnapshotTableStreamReader(root, {})._version_tasks(0))
+    assert len(nonempty) == -(-n_files // 3)
     # a second fat commit + restart: resumes throttled, no re-delivery
     s.write(
         _df(spark, [(i, f"d{i % 8}", i) for i in range(16, 32)])
@@ -318,9 +322,10 @@ def test_table_source_file_limit_offsets_unit(registered, tmp_path):
         nxt = r.latestOffset()
         if nxt == cur:
             break
-        parts = r.partitions(cur, nxt)
-        assert 1 <= len(parts) <= 2
-        seen += [p.path for p in parts]
+        runs = r.partitions(cur, nxt)
+        files = [t for run in runs for t in run.tasks]
+        assert 1 <= len(files) <= 2 and len(runs) <= len(files)
+        seen += [t.path for t in files]
         r.commit(nxt)
         cur = nxt
     assert seen == [p.path for p in r._version_tasks(0)]  # exact order
@@ -456,7 +461,11 @@ def test_changelog_preimage_partition_pruning(registered, tmp_path):
         ["day", "id"],
     )
     reader = SnapshotTableStreamReader(root, {"mode": "changelog"})
-    parts = reader.partitions({"version": 0}, {"version": 1})
+    parts = [
+        t
+        for run in reader.partitions({"version": 0}, {"version": 1})
+        for t in run.tasks
+    ]
     assert parts, "expected pre-image tasks"
     assert all("day=d3" in p.path for p in parts)
     assert all(
