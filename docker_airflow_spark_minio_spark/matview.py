@@ -342,48 +342,51 @@ class IncrementalMatView:
                     # a recomputed partition may now be EMPTY (every
                     # row deleted): claim it so the overwrite removes it
                     claimed = del_vals
-                # Materialize the delta partial ONCE (localCheckpoint,
-                # guide §5 reuse -- within this refresh evaluation
-                # only): both the touched-partition probe and the merge
-                # write read it, so the appended-dirs scan+aggregation
-                # runs once instead of twice.  partition_by is a subset
-                # of group_by (checked in __init__), so the partial's
-                # group rows project to exactly the delta's distinct
-                # partition tuples.
-                partial = self._partial(delta).localCheckpoint()
-                # O(affected partitions) driver rows -- the same
-                # cardinality the overwrite commit itself must track.
-                vals = (
-                    partial.select(*self.partition_by).distinct().collect()
-                )
-                dirs = [
-                    hive_partition_dir(
-                        self.spark,
-                        self.partition_by,
-                        tuple(r[c] for c in self.partition_by),
+                # Compute the delta partial ONCE (cached within this
+                # refresh evaluation only, guide §5 reuse, and released
+                # after the commit): both the touched-partition probe
+                # and the merge write read it, so the appended-dirs
+                # scan+aggregation runs once instead of twice.
+                # partition_by is a subset of group_by (checked in
+                # __init__), so the partial's group rows project to
+                # exactly the delta's distinct partition tuples.
+                partial = self._partial(delta).persist()
+                try:
+                    # O(affected partitions) driver rows -- the same
+                    # cardinality the overwrite commit itself must track.
+                    vals = (
+                        partial.select(*self.partition_by).distinct().collect()
                     )
-                    for r in vals
-                ]
-                # Affected dirs that exist in the summary yet (a delta
-                # made ONLY of brand-new groups has none -- the merge is
-                # then just the partial itself).
-                _, by_vdir, _, _ = self.target.plan_dirs(partitions=dirs)
-                existing = sorted({p for ps in by_vdir.values() for p in ps})
-                current = (
-                    self.target.read(partitions=existing)
-                    if existing
-                    else partial.limit(0)
-                )
-                merged = self._merge(current, partial)
-                if recomputed is not None:
-                    merged = merged.unionByName(recomputed)
-                v = self.target.write(
-                    merged,
-                    mode="overwrite_partitions",
-                    partition_by=self.partition_by,
-                    claimed_partitions=claimed,
-                    watermarks=wm,
-                )
+                    dirs = [
+                        hive_partition_dir(
+                            self.spark,
+                            self.partition_by,
+                            tuple(r[c] for c in self.partition_by),
+                        )
+                        for r in vals
+                    ]
+                    # Affected dirs that exist in the summary yet (a delta
+                    # made ONLY of brand-new groups has none -- the merge is
+                    # then just the partial itself).
+                    _, by_vdir, _, _ = self.target.plan_dirs(partitions=dirs)
+                    existing = sorted({p for ps in by_vdir.values() for p in ps})
+                    current = (
+                        self.target.read(partitions=existing)
+                        if existing
+                        else partial.limit(0)
+                    )
+                    merged = self._merge(current, partial)
+                    if recomputed is not None:
+                        merged = merged.unionByName(recomputed)
+                    v = self.target.write(
+                        merged,
+                        mode="overwrite_partitions",
+                        partition_by=self.partition_by,
+                        claimed_partitions=claimed,
+                        watermarks=wm,
+                    )
+                finally:
+                    partial.unpersist()
             else:
                 merged = self._merge(self.target.read(), self._partial(delta))
                 v = self.target.write(merged, mode="snapshot", watermarks=wm)

@@ -426,14 +426,14 @@ def _vdir_version(vdir: str) -> int:
     return int(vdir[1:].split("-", 1)[0])
 
 
-def _local_dir_file_sizes(path: str, depth: int) -> dict[str, int]:
-    """Pure-Python per-partition-dir byte sums of a local data dir
-    (relative Hive part -> bytes; ``""`` for unpartitioned) -- shared
-    by the Spark store's local fast lane and the Spark-less SQL-write
-    committer."""
+def _local_dir_file_sizes(path: str, depth: int) -> dict[str, list[int]]:
+    """Pure-Python per-partition-dir data-file sizes of a local data
+    dir (relative Hive part -> byte size per file; ``""`` for
+    unpartitioned) -- shared by the Spark store's local fast lane and
+    the Spark-less SQL-write committer."""
     import os as _os
 
-    out: dict[str, int] = {}
+    out: dict[str, list[int]] = {}
     for dirpath, _dirs, files in _os.walk(path):
         rel = _os.path.relpath(dirpath, path)
         part = "" if rel == "." else rel.replace(_os.sep, "/")
@@ -442,8 +442,8 @@ def _local_dir_file_sizes(path: str, depth: int) -> dict[str, int]:
             continue
         for f in files:
             if f.endswith(".parquet") and not f.startswith((".", "_")):
-                out[part] = out.get(part, 0) + _os.path.getsize(
-                    f"{dirpath}/{f}"
+                out.setdefault(part, []).append(
+                    _os.path.getsize(f"{dirpath}/{f}")
                 )
     return out
 
@@ -2550,12 +2550,12 @@ class SnapshotStore:
             raise
         return version
 
-    def _touched_partition_dirs(self, condition) -> tuple[list, list] | None:
+    def _touched_partition_dirs(self, condition) -> tuple[list, list]:
         """(claimed value tuples, partition rel-dirs) holding rows where
-        ``condition`` IS TRUE, or None when nothing matches / the table
-        is unpartitioned.  One filtered scan projecting only the
-        partition columns (parquet pushes the predicate's columns;
-        nothing else is read)."""
+        ``condition`` IS TRUE; both empty when nothing matches.  An
+        unpartitioned table is its one partition ``()`` / ``""``.  One
+        filtered scan projecting only the partition columns (parquet
+        pushes the predicate's columns; nothing else is read)."""
         from pyspark.sql import functions as F
 
         head = self.current_version()
@@ -2563,22 +2563,60 @@ class SnapshotStore:
             raise ValueError(f"no snapshots committed under {self.root}")
         m = self._read_manifest(head)
         pby = m["partition_by"]
-        if not pby:
-            return None
         matching = self.read().where(F.coalesce(condition, F.lit(False)))
         # hidden partitioning: recompute derived routing columns so the
         # physical spec is selectable (read() hides them by design)
         trans = m.get("partition_transforms") or {}
         if trans:
             matching = _apply_transforms(matching, trans)
-        rows = matching.select(*pby).distinct().collect()
-        if not rows:
-            return ([], [])
+        # a grouped count, not distinct(): with no partition columns the
+        # aggregate is global and HAVING keeps its row only on a match
+        rows = (
+            matching.groupBy(*pby)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .where(F.col("__n") > 0)
+            .collect()
+        )
         tuples = [tuple(r[c] for c in pby) for r in rows]
-        dirs = [
-            _hive_partition_dir(self.spark, pby, t) for t in tuples
-        ]
-        return (tuples, dirs)
+        return (tuples, [_hive_partition_dir(self.spark, pby, t) for t in tuples])
+
+    @staticmethod
+    def _refuse_staged_unpartitioned(op: str, pby: list, staged) -> None:
+        if staged is not None and not pby:
+            raise ValueError(
+                f"staged {op} requires a partitioned table: an "
+                f"unpartitioned COW {op.split('_')[0]} is a full replace, "
+                "which has no claimable partition surface"
+            )
+
+    def _commit_rewrite(
+        self, df: DataFrame, pby: list, tuples: list, head: int,
+        metadata: dict | None, staged: str | None,
+    ) -> int:
+        """Commit a row-level rewrite of the touched partitions
+        ``tuples``, computed against ``head``: one ``overwrite_partitions``
+        commit claiming them (a claimed partition left empty drops), or
+        -- unpartitioned, where the one partition is the table -- a full
+        ``snapshot`` replace."""
+        if not pby:
+            return self.write(
+                df, mode="snapshot", partition_by=pby, metadata=metadata,
+                require_parent_v=head,
+            )
+        ident = [c for c in pby if c in df.columns]
+        if ident:
+            # transform-spec columns are absent here: write() rebalances
+            # by the FULL physical spec (incl. derived columns)
+            df = df.repartition(*ident)
+        return self.write(
+            df,
+            mode="overwrite_partitions",
+            partition_by=pby,
+            claimed_partitions=tuples,
+            metadata=metadata,
+            staged=staged,
+            require_parent_v=None if staged is not None else head,
+        )
 
     def delete_where(
         self,
@@ -2644,45 +2682,17 @@ class SnapshotStore:
                 return self.delete_positions(pos, metadata=metadata)
             finally:
                 pos.unpersist()
-        touched = self._touched_partition_dirs(condition)
-        if touched is None:
-            if staged is not None:
-                raise ValueError(
-                    "staged delete_where requires a partitioned table: "
-                    "an unpartitioned COW delete is a full replace, "
-                    "which has no claimable partition surface"
-                )
-            # Unpartitioned: COW is inherently a full rewrite, but a
-            # no-op predicate must not commit a spurious version -- probe
-            # for one match first (limit(1) short-circuits the scan), the
-            # same "None when nothing matched" contract the partitioned
-            # arm keeps via its empty touched set.
-            if self.read().where(cond_true).limit(1).isEmpty():
-                return None
-            head = self.current_version()
-            pby = self._read_manifest(head)["partition_by"]
-            remaining = self.read(as_of=head).where(~cond_true)
-            return self.write(
-                remaining, mode="snapshot", partition_by=pby,
-                metadata=metadata, require_parent_v=head,
-            )
-        tuples, dirs = touched
+        head = self.current_version()
+        if head is None:
+            raise ValueError(f"no snapshots committed under {self.root}")
+        pby = self._read_manifest(head)["partition_by"]
+        self._refuse_staged_unpartitioned("delete_where", pby, staged)
+        tuples, dirs = self._touched_partition_dirs(condition)
         if not tuples:
             return None
-        head = self.current_version()
-        pby = self._read_manifest(head)["partition_by"]
         remaining = self.read(as_of=head, partitions=dirs).where(~cond_true)
-        ident = [c for c in pby if c in remaining.columns]
-        if ident:
-            remaining = remaining.repartition(*ident)
-        return self.write(
-            remaining,
-            mode="overwrite_partitions",
-            partition_by=pby,
-            claimed_partitions=tuples,
-            metadata=metadata,
-            staged=staged,
-            require_parent_v=None if staged is not None else head,
+        return self._commit_rewrite(
+            remaining, pby, tuples, head, metadata, staged
         )
 
     def update_where(
@@ -2739,62 +2749,30 @@ class SnapshotStore:
                 "would land in partitions this commit never read; "
                 "delete + append instead"
             )
+        self._refuse_staged_unpartitioned("update_where", pby, staged)
+        tuples, dirs = self._touched_partition_dirs(condition)
+        if not tuples:
+            return None
+        df = self.read(as_of=head, partitions=dirs)
+        missing = sorted(set(assignments) - set(df.columns))
+        if missing:
+            raise ValueError(f"assigned columns {missing} not in table schema")
+        types = {f.name: f.dataType for f in df.schema.fields}
         cond_true = F.coalesce(condition, F.lit(False))
 
-        def _apply(df: DataFrame) -> DataFrame:
-            missing = sorted(set(assignments) - set(df.columns))
-            if missing:
-                raise ValueError(
-                    f"assigned columns {missing} not in table schema"
-                )
-            types = {f.name: f.dataType for f in df.schema.fields}
-            def _val(c: str) -> Column:
-                a = assignments[c]
-                return (a if isinstance(a, Column) else F.lit(a)).cast(
-                    types[c]
-                )
+        def _val(c: str) -> Column:
+            a = assignments[c]
+            return (a if isinstance(a, Column) else F.lit(a)).cast(types[c])
 
-            cols = [
+        updated = df.select(
+            *(
                 F.when(cond_true, _val(c)).otherwise(F.col(c)).alias(c)
                 if c in assignments
                 else F.col(c)
                 for c in df.columns
-            ]
-            return df.select(*cols)
-
-        touched = self._touched_partition_dirs(condition)
-        if touched is None:
-            if staged is not None:
-                raise ValueError(
-                    "staged update_where requires a partitioned table: "
-                    "an unpartitioned COW update is a full replace, "
-                    "which has no claimable partition surface"
-                )
-            # Same no-match probe as delete_where's unpartitioned arm:
-            # honor "None when nothing matched (no commit)" instead of
-            # committing a full-rewrite no-op version.
-            if self.read().where(cond_true).limit(1).isEmpty():
-                return None
-            return self.write(
-                _apply(self.read(as_of=head)), mode="snapshot",
-                partition_by=pby, metadata=metadata, require_parent_v=head,
             )
-        tuples, dirs = touched
-        if not tuples:
-            return None
-        updated = _apply(self.read(as_of=head, partitions=dirs))
-        ident = [c for c in pby if c in updated.columns]
-        if ident:
-            updated = updated.repartition(*ident)
-        return self.write(
-            updated,
-            mode="overwrite_partitions",
-            partition_by=pby,
-            claimed_partitions=tuples,
-            metadata=metadata,
-            staged=staged,
-            require_parent_v=None if staged is not None else head,
         )
+        return self._commit_rewrite(updated, pby, tuples, head, metadata, staged)
 
     def merge_into(
         self,
@@ -2829,9 +2807,8 @@ class SnapshotStore:
         arm; their conditions see target columns only).  Scale note:
         a by-source clause inherently touches every partition holding
         an unmatched row that satisfies it -- for an unconditional
-        ``DELETE`` that is the whole table (the full-sync shape); the
-        anti-join that finds them shuffles key columns only.  Clause
-        conditions / values may be Columns, SQL strings
+        ``DELETE`` that is the whole table (the full-sync shape).
+        Clause conditions / values may be Columns, SQL strings
         (parsed with :func:`~pyspark.sql.functions.expr`), or plain
         Python literals (values only).  Per SQL semantics the FIRST
         clause whose condition evaluates TRUE wins per row; rows
@@ -2840,26 +2817,36 @@ class SnapshotStore:
         clause changed anything (no commit).
 
         ``validate_cardinality`` (default on, matching Spark/Iceberg's
-        runtime check): raises when a target row matches MORE THAN ONE
-        source row while update/delete clauses exist -- applying both
-        would be nondeterministic.  The check is one extra aggregate
-        over the touched partitions' join keyed on the scan's
-        ``(_file, _pos)`` row handles; disable it only when ``on`` is
-        known key-unique.
+        runtime check): raises when a target row in a touched partition
+        matches MORE THAN ONE source row while update/delete clauses
+        exist -- applying both would be nondeterministic.  The check
+        rides the probe (a match count per ``(_file, _pos)`` row
+        handle); disable it only when ``on`` is known key-unique.
 
-        Scale shape: touched partitions = partitions holding matched
-        target rows UNION partitions receiving inserts -- everything
-        else is never read or written; the source is scanned a bounded
-        number of times (semi-join for touched, anti-join for inserts,
-        outer join for the rewrite -- each a key-only or
-        clause-projected shuffle); inserts landing in brand-new
-        partition values claim them without reading anything.
+        Scale shape: two Spark actions, over a source cached on first
+        use and released after the commit.  The PROBE is one join of
+        the whole table with the source -- inner, left, right or full
+        outer by the clause kinds present, as Spark's own MERGE rewrite
+        picks -- aggregated to the touched partitions and each matched
+        row's source-match count.  Touched = partitions holding matched
+        target rows, by-source rows a clause fires on and insert rows;
+        a merge with inserts but no matched clause also reads, without
+        rewriting, the partitions of its matched rows.  The REWRITE
+        joins only the touched and read partitions with the source and
+        yields survivors and inserts together: every matched target
+        row's partition is read, so a source row unmatched there is
+        unmatched in the whole table.  Nothing else is read or
+        written; inserts into brand-new partition values
+        claim them without reading anything.  An insert-only merge
+        anti-joins instead (an outer join would copy a target row once
+        per source match).
         Partition columns (and hidden-partitioning transform sources)
         cannot be assigned by an update clause -- a row changing
         partition under ``overwrite_partitions`` would land among rows
         this commit never read (same refusal as :meth:`update_where`);
         express moves as a delete clause + insert clause instead.
-        Unpartitioned tables rewrite fully (inherent to COW).
+        Unpartitioned tables are one partition and rewrite fully
+        (inherent to COW).
 
         ``staged``: write-audit-publish id, PARTITIONED tables only --
         the merged rewrite stages invisibly for
@@ -2867,6 +2854,7 @@ class SnapshotStore:
         as ``update_where(staged=)``: clause effects computed from the
         PUBLISHED head at stage time, the touched partitions claimed
         and validated pre-WAL-claim, so publish can never refuse)."""
+        from pyspark import StorageLevel
         from pyspark.sql import functions as F
 
         matched = list(matched or [])
@@ -2901,10 +2889,11 @@ class SnapshotStore:
                         "clause instead"
                     )
 
-        def _cond(c) -> Column:
+        def _fires(cl) -> Column:
+            c = cl[1]
             if c is None:
                 return F.lit(True)
-            return F.expr(c) if isinstance(c, str) else c
+            return F.coalesce(F.expr(c) if isinstance(c, str) else c, F.lit(False))
 
         def _val(v) -> Column:
             if isinstance(v, Column):
@@ -2913,33 +2902,23 @@ class SnapshotStore:
                 return F.expr(v)
             return F.lit(v)
 
-        t = self.read(as_of=head).alias(target_alias)
-        tcols = t.columns
-        ttypes = {f.name: f.dataType for f in t.schema.fields}
+        table = self.read(as_of=head, with_positions=True)
+        tcols = [c for c in table.columns if c not in ("_file", "_pos")]
+        ttypes = {f.name: f.dataType for f in table.schema.fields}
         on_col = F.expr(on) if isinstance(on, str) else on
-        # Materialize the source ONCE (Delta's merge source
-        # materialization): the clauses below otherwise re-evaluate it
-        # per action -- touched-partition semi/anti probe, cardinality
-        # aggregate, final outer join -- which for a snapshot-table or
-        # subquery source re-runs its whole scan each time (guide §5
-        # reuse).  Also pins a nondeterministic source to one
-        # evaluation, so every arm sees identical rows.
-        source = source.localCheckpoint(eager=True)
-        s_marked = source.withColumn("__m", F.lit(1)).alias(source_alias)
+        tgt = {c: F.col(f"{target_alias}.{c}") for c in tcols}
 
-        # -- inserts: source rows matching NO target row, first
-        #    not-matched clause wins ---------------------------------------
-        ins = None
+        # -- source side: the insert chain (first firing clause wins) is
+        #    evaluated on the source alone, as __ins_<i> + __ikeep -------
+        marks = {"__m": F.lit(1)}
         if not_matched:
-            ins_src = source.alias(source_alias).join(t, on_col, "left_anti")
             already = F.lit(False)
-            keep = F.lit(False)
-            vals = {c: F.lit(None).cast(ttypes[c]) for c in tcols}
+            ins = {c: F.lit(None).cast(ttypes[c]) for c in tcols}
             for cl in not_matched:
-                fire = ~already & F.coalesce(_cond(cl[1]), F.lit(False))
+                fire = ~already & _fires(cl)
                 assigns = cl[2]
                 if assigns is None:  # INSERT *
-                    missing = sorted(set(tcols) - set(ins_src.columns))
+                    missing = sorted(set(tcols) - set(source.columns))
                     if missing:
                         raise ValueError(
                             f"INSERT * requires source columns {missing}"
@@ -2954,186 +2933,160 @@ class SnapshotStore:
                         )
                 for c in tcols:
                     if c in assigns:
-                        vals[c] = F.when(
+                        ins[c] = F.when(
                             fire, _val(assigns[c]).cast(ttypes[c])
-                        ).otherwise(vals[c])
-                keep = keep | fire
+                        ).otherwise(ins[c])
                 already = already | fire
-            ins = (
-                ins_src.withColumn("__keep", keep)
-                .where(F.col("__keep"))
-                .select(*(vals[c].alias(c) for c in tcols))
+            marks["__ikeep"] = already
+            marks.update({f"__ins_{i}": ins[c] for i, c in enumerate(tcols)})
+            ins = {c: F.col(f"__ins_{i}") for i, c in enumerate(tcols)}
+
+        # -- target side: matched and by-source chains, two independent
+        #    first-match-wins chains gated apart by the match marker -----
+        has_t, has_s = F.col("__t").isNotNull(), F.col("__m").isNotNull()
+        is_matched = has_t & has_s
+        delete_fire = F.lit(False)
+        vals = {c: tgt[c].cast(ttypes[c]) for c in tcols}
+        for chain, gate in ((matched, is_matched), (by_source, has_t & ~has_s)):
+            already = F.lit(False)
+            for cl in chain:
+                fire = gate & ~already & _fires(cl)
+                if cl[0] == "delete":
+                    delete_fire = delete_fire | fire
+                else:
+                    unknown = sorted(set(cl[2]) - set(tcols))
+                    if unknown:
+                        raise ValueError(
+                            f"UPDATE SET columns {unknown} not in "
+                            f"table schema {tcols}"
+                        )
+                    for c in cl[2]:
+                        vals[c] = F.when(
+                            fire, _val(cl[2][c]).cast(ttypes[c])
+                        ).otherwise(vals[c])
+                already = already | fire
+        by_source_fires = already  # the loop ends on the by-source chain
+        self._refuse_staged_unpartitioned("merge_into", pby, staged)
+
+        own_cache = source.storageLevel == StorageLevel.NONE
+        if own_cache:
+            # compute the source once for the probe and the rewrite (a
+            # snapshot-table or subquery source re-runs its scan per
+            # action otherwise); also pins a nondeterministic source to
+            # one evaluation, so both joins see identical rows
+            source = source.persist()
+        try:
+            src = source.alias(source_alias).withColumns(marks).alias(
+                source_alias
             )
 
-        # -- touched partitions: matched rows' dirs + insert rows' dirs ---
-        if staged is not None and not pby:
-            raise ValueError(
-                "staged merge_into requires a partitioned table: an "
-                "unpartitioned COW merge is a full replace, which has "
-                "no claimable partition surface"
-            )
-        if pby:
-            # ONE distinct-partition probe job for all three row
-            # sources (matched dirs, by-source dirs, insert dirs) --
-            # the set union is identical to probing each separately,
-            # and a merge paid up to three join-evaluating actions here
-            probe_frames = []
+            # -- the probe: touched partitions + per-row match counts ---
+            how = ("inner", "left_outer", "right_outer", "full_outer")[
+                bool(by_source) + 2 * bool(not_matched)
+            ]
+            probe = table.withColumn("__t", F.lit(1)).alias(target_alias)
+            probe = probe.join(src, on_col, how)
+            change = by_source_fires
             if matched:
-                mt = t.join(s_marked, on_col, "left_semi")
-                if trans:
-                    mt = _apply_transforms(mt, trans)
-                probe_frames.append(mt.select(*pby))
-            if by_source:
-                bs_cond = reduce(
-                    lambda a, b: a | b,
-                    (
-                        F.coalesce(_cond(cl[1]), F.lit(False))
-                        for cl in by_source
-                    ),
-                )
-                bt = t.join(s_marked, on_col, "left_anti").where(bs_cond)
-                if trans:
-                    bt = _apply_transforms(bt, trans)
-                probe_frames.append(bt.select(*pby))
-            if ins is not None:
-                it = _apply_transforms(ins, trans) if trans else ins
-                probe_frames.append(it.select(*pby))
-            tuples = (
-                [
-                    tuple(r[c] for c in pby)
-                    for r in reduce(
-                        lambda a, b: a.unionByName(b), probe_frames
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                if probe_frames
-                else []
-            )
-            tuples = sorted(set(tuples), key=lambda v: tuple(map(str, v)))
-            if not tuples:
-                return None
-            dirs = [_hive_partition_dir(self.spark, pby, v) for v in tuples]
-            existing = [d for d in dirs if d in m_head["partitions"]]
-            base = (
-                self.read(
-                    as_of=head, partitions=existing, with_positions=True
-                )
-                if existing
-                else t.limit(0).withColumns(
-                    {"_file": F.lit(""), "_pos": F.lit(0)}
-                )
-            )
-        else:
-            # unpartitioned: COW is a full rewrite; keep the "None when
-            # nothing changed" contract via cheap probes
-            has_match = bool(matched) and not (
-                t.join(s_marked, on_col, "left_semi").limit(1).isEmpty()
-            )
-            has_ins = ins is not None and not ins.limit(1).isEmpty()
-            has_bs = bool(by_source) and not (
-                t.join(s_marked, on_col, "left_anti")
-                .where(
-                    reduce(
-                        lambda a, b: a | b,
-                        (
-                            F.coalesce(_cond(cl[1]), F.lit(False))
-                            for cl in by_source
-                        ),
-                    )
-                )
-                .limit(1)
-                .isEmpty()
-            )
-            if not has_match and not has_ins and not has_bs:
-                return None
-            tuples, existing = None, None
-            base = self.read(as_of=head, with_positions=True)
-        base = base.alias(target_alias)
-
-        # -- survivors: touched-partition rows with matched clauses
-        #    applied (first TRUE clause wins), deletes filtered ------------
-        if matched or by_source:
-            if validate_cardinality:
-                dup = (
-                    base.join(s_marked, on_col, "inner")
-                    .groupBy("_file", "_pos")
-                    .count()
-                    .where(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    raise ValueError(
-                        "MERGE cardinality violation: a target row "
-                        "matches more than one source row; make the ON "
-                        "condition key-unique (or pre-aggregate the "
-                        "source), or pass validate_cardinality=False "
-                        "to accept nondeterministic clause application"
-                    )
-            joined = base.join(s_marked, on_col, "left_outer")
-            is_matched = F.col("__m").isNotNull()
-            delete_fire = F.lit(False)
-            vals = {
-                c: F.col(f"{target_alias}.{c}").cast(ttypes[c])
+                change = change | is_matched
+            if not_matched:
+                change = change | (~has_t & F.col("__ikeep"))
+            part = {
+                c: F.when(has_t, tgt[c]).otherwise(ins[c])
+                if not_matched
+                else tgt[c]
                 for c in tcols
+                if c in routing
             }
-            # two independent first-match-wins chains: matched clauses
-            # fire on joined rows, by-source clauses on the rest --
-            # disjoint by is_matched, so the nested whens cannot clash
-            for chain, gate in (
-                (matched, is_matched),
-                (by_source, ~is_matched),
+            keyed = probe.where(change | is_matched).select(
+                *(v.alias(c) for c, v in part.items()),
+                F.when(is_matched, F.col(f"{target_alias}._file")).alias("__f"),
+                F.when(is_matched, F.col(f"{target_alias}._pos")).alias("__p"),
+                change.alias("__chg"),
+            )
+            if trans:
+                keyed = _apply_transforms(keyed, trans)
+            rows = (
+                keyed.groupBy("__f", "__p", *pby)
+                .agg(F.count(F.lit(1)).alias("__n"), F.max("__chg").alias("__chg"))
+                .groupBy(*pby)
+                .agg(
+                    F.max(F.when(F.col("__f").isNotNull(), F.col("__n"))).alias(
+                        "__card"
+                    ),
+                    F.max("__chg").alias("__chg"),
+                )
+                .collect()
+            )
+            if not any(r["__chg"] for r in rows):
+                return None
+            if (
+                validate_cardinality
+                and (matched or by_source)
+                and any(r["__chg"] and (r["__card"] or 0) > 1 for r in rows)
             ):
-                already = F.lit(False)
-                for cl in chain:
-                    fire = (
-                        gate
-                        & ~already
-                        & F.coalesce(_cond(cl[1]), F.lit(False))
-                    )
-                    if cl[0] == "delete":
-                        delete_fire = delete_fire | fire
-                    else:
-                        unknown = sorted(set(cl[2]) - set(tcols))
-                        if unknown:
-                            raise ValueError(
-                                f"UPDATE SET columns {unknown} not in "
-                                f"table schema {tcols}"
-                            )
-                        for c in cl[2]:
-                            vals[c] = F.when(
-                                fire, _val(cl[2][c]).cast(ttypes[c])
-                            ).otherwise(vals[c])
-                    already = already | fire
-            survivors = (
-                joined.withColumn("__del", delete_fire)
-                .where(~F.col("__del"))
-                .select(*(vals[c].alias(c) for c in tcols))
-            )
-        else:
-            survivors = base.select(*tcols)
+                raise ValueError(
+                    "MERGE cardinality violation: a target row "
+                    "matches more than one source row; make the ON "
+                    "condition key-unique (or pre-aggregate the "
+                    "source), or pass validate_cardinality=False "
+                    "to accept nondeterministic clause application"
+                )
 
-        final = survivors.unionByName(ins) if ins is not None else survivors
-        if pby:
-            ident = [c for c in pby if c in final.columns]
-            if ident and not trans:
-                # transform-spec tables skip this: write() rebalances
-                # by the FULL physical spec (incl. derived columns)
-                final = final.repartition(*ident)
-            return self.write(
-                final,
-                mode="overwrite_partitions",
-                partition_by=pby,
-                claimed_partitions=tuples,
-                metadata=metadata,
-                staged=staged,
-                require_parent_v=None if staged is not None else head,
+            def _read(parts: list) -> DataFrame:
+                dirs = [_hive_partition_dir(self.spark, pby, v) for v in parts]
+                existing = [d for d in dirs if d in m_head["partitions"]]
+                if not existing:
+                    return table.select(*tcols).limit(0)
+                return self.read(as_of=head, partitions=existing)
+
+            def _key(r) -> tuple:
+                return tuple(r[c] for c in pby)
+
+            tuples = sorted(
+                (_key(r) for r in rows if r["__chg"]),
+                key=lambda v: tuple(map(str, v)),
             )
-        return self.write(
-            final, mode="snapshot", partition_by=pby, metadata=metadata,
-            require_parent_v=head,
-        )
+            base = _read(tuples)
+
+            # -- the rewrite: one join of the touched partitions --------
+            # With inserts, a partition holding matched rows that no
+            # clause changes is read (__t false) so those source rows
+            # stay no inserts, but it is not rewritten.
+            tb = base.withColumn("__t", F.lit(True))
+            peek = [_key(r) for r in rows if not r["__chg"]] if not_matched else []
+            if peek:
+                tb = tb.unionByName(_read(peek).withColumn("__t", F.lit(False)))
+            tb = tb.alias(target_alias)
+            if matched or by_source:
+                joined = tb.join(
+                    src, on_col, "full_outer" if not_matched else "left_outer"
+                )
+                keep, out = ~delete_fire, vals
+                if not_matched:
+                    keep = F.when(has_t, F.col("__t") & keep).otherwise(
+                        F.col("__ikeep")
+                    )
+                    out = {
+                        c: F.when(has_t, vals[c]).otherwise(ins[c]) for c in tcols
+                    }
+                final = (
+                    joined.withColumn("__keep", keep)
+                    .where(F.col("__keep"))
+                    .select(*(out[c].alias(c) for c in tcols))
+                )
+            else:
+                final = base.unionByName(
+                    src.join(tb, on_col, "left_anti")
+                    .where(F.col("__ikeep"))
+                    .select(*(ins[c].alias(c) for c in tcols))
+                )
+            return self._commit_rewrite(
+                final, pby, tuples, head, metadata, staged
+            )
+        finally:
+            if own_cache:
+                source.unpersist()
 
     def evolve_schema(
         self,
@@ -3696,10 +3649,12 @@ class SnapshotStore:
         """IO leaf: recursive delete (Spark-less callers override)."""
         delete_prefix(self.spark, path)
 
-    def _dir_file_sizes(self, data_path: str, depth: int) -> dict[str, int]:
-        """IO leaf: per-partition-dir BYTE sums of a just-written data
-        dir (relative Hive part -> bytes; ``""`` for unpartitioned) --
-        a metadata-sized listing, no data read.  Local roots take the
+    def _dir_file_sizes(
+        self, data_path: str, depth: int
+    ) -> dict[str, list[int]]:
+        """IO leaf: per-partition-dir data-file sizes of a just-written
+        data dir (relative Hive part -> byte size per file; ``""`` for
+        unpartitioned) -- a metadata-sized listing, no data read.  Local roots take the
         os.walk fast lane: the Hadoop iterator costs several py4j
         round-trips PER FILE, which measurably inflated every
         multi-commit scenario before this split (bench round 12);
@@ -3711,7 +3666,7 @@ class SnapshotStore:
         if "://" not in path:
             return _local_dir_file_sizes(path, depth)
         fs, base = _fs_and_path(self.spark, data_path)
-        out: dict[str, int] = {}
+        out: dict[str, list[int]] = {}
 
         def walk(p, d: int, rel: str) -> None:
             for st in fs.listStatus(p):
@@ -3727,7 +3682,7 @@ class SnapshotStore:
                 if name.endswith(".parquet") and not name.startswith(
                     (".", "_")
                 ):
-                    out[rel] = out.get(rel, 0) + int(st.getLen())
+                    out.setdefault(rel, []).append(int(st.getLen()))
 
         walk(base, depth, "")
         return out
@@ -3816,6 +3771,10 @@ class SnapshotStore:
         file_blooms: dict[str, dict] = {}
         dir_rows: dict[str, int] = {}
         own_sidecars: list[dict] = []
+        # per-directory data-file sizes: a listing of the just-written
+        # files, no data scan.  It also gives the commit's file count,
+        # which picks inline stats rows or the sidecar below.
+        file_sizes = self._dir_file_sizes(data_path, len(pby))
         if precomputed_stats is not None:
             # Spark-less callers (the SQL write path's
             # LocalSnapshotCommitter) computed per-file zone maps /
@@ -3883,19 +3842,24 @@ class SnapshotStore:
             agg_df = scan.groupBy(
                 F.input_file_name().alias("__file"), *pby
             ).agg(*aggs)
-            agg_df.persist()
-            try:
-                n_file_rows = agg_df.count()
-                threshold = (
-                    SIDECAR_FILE_THRESHOLD
-                    if stats_sidecar_threshold is None
-                    else stats_sidecar_threshold
-                )
-                if n_file_rows > threshold:
-                    # 100 TB path: the per-file rows never reach the
-                    # driver -- executors write them as a parquet
-                    # sidecar the manifest references; the driver keeps
-                    # only the per-DIRECTORY rollup (O(partitions)).
+            threshold = (
+                SIDECAR_FILE_THRESHOLD
+                if stats_sidecar_threshold is None
+                else stats_sidecar_threshold
+            )
+            per_file_rows = (
+                sum(len(v) for v in file_sizes.values()) <= threshold
+            )
+            if per_file_rows:
+                rows = agg_df.collect()
+            else:
+                # 100 TB path: the per-file rows never reach the
+                # driver -- executors write them as a parquet sidecar
+                # the manifest references; the driver keeps only the
+                # per-DIRECTORY rollup (O(partitions)).  Both read the
+                # aggregate, so it is cached for the two of them.
+                agg_df.persist()
+                try:
                     own_sidecars.append(
                         self._write_stats_sidecar(
                             agg_df, vdir, stats_cols, bloom_cols, bloom_bits
@@ -3908,12 +3872,8 @@ class SnapshotStore:
                             F.max(f"mx_{c}").alias(f"mx_{c}"),
                         ]
                     rows = agg_df.groupBy(*pby).agg(*roll).collect()
-                    per_file_rows = False
-                else:
-                    rows = agg_df.collect()
-                    per_file_rows = True
-            finally:
-                agg_df.unpersist()
+                finally:
+                    agg_df.unpersist()
             raw_dir: dict[str, dict[str, list]] = {}
             for r in rows:
                 part = (
@@ -3959,13 +3919,12 @@ class SnapshotStore:
         fresh_file_stats = dict(file_stats)
         fresh_file_blooms = dict(file_blooms)
         fresh_dir_rows = dict(dir_rows)
-        # per-directory data-file BYTE sums, recorded unconditionally
-        # (a listing of the just-written files, no data scan): the
-        # size statistic join planning actually needs -- Spark's
+        # per-directory data-file BYTE sums, recorded unconditionally:
+        # the size statistic join planning actually needs -- Spark's
         # broadcast threshold is bytes, not rows (plans/join_stats.py)
         dir_bytes = {
-            (f"{vdir}/{p}" if p else vdir): b
-            for p, b in self._dir_file_sizes(data_path, len(pby)).items()
+            (f"{vdir}/{p}" if p else vdir): sum(sizes)
+            for p, sizes in file_sizes.items()
             if vdir in partitions.get(p, [])
         }
         fresh_dir_bytes = dict(dir_bytes)

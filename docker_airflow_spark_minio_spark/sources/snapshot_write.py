@@ -345,7 +345,7 @@ class LocalSnapshotCommitter(LocalSnapshotPlanner):
     def _delete_prefix(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
-    def _dir_file_sizes(self, data_path: str, depth: int) -> dict[str, int]:
+    def _dir_file_sizes(self, data_path: str, depth: int) -> dict[str, list[int]]:
         from ..snapshots import _local_dir_file_sizes
 
         return _local_dir_file_sizes(data_path, depth)

@@ -311,15 +311,18 @@ TFIDF_TOP_K = 3
     """,
     category="text",
     description=f"TF-IDF top-{TFIDF_TOP_K} terms per document: tf from an "
-    "exploded token aggregate, idf joined on the term (shuffle key = "
-    "term, bounded by vocabulary), rounded so ln() ulp noise is buried",
+    "exploded token aggregate, idf from a per-term count of it broadcast "
+    "back on the term (bounded by vocabulary), rounded so ln() ulp noise "
+    "is buried",
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale notes: the corpus is tokenized ONCE -- df(term) is a window
-    count over the tf relation (one row per (doc, term), so rows-per-term
-    = distinct docs containing the term), not a second explode + distinct
-    aggregate + join.  One scan, three exchanges (tf agg, term window,
-    doc_id window), no join; the exploded token stream is shuffled
+    """Scale notes: the corpus is tokenized ONCE -- df(term) is a count
+    over the tf relation (one row per (doc, term), so rows-per-term =
+    distinct docs containing the term), not a second explode + distinct
+    aggregate.  The per-term count combines map-side, so a frequent
+    term ships one row per task (a window partitioned by term sent all
+    its rows to one task), and its vocabulary-sized result is broadcast
+    back onto tf.  One scan; the exploded token stream is shuffled
     exactly once."""
     docs = load_tables(spark, sf_dir)["documents"]
     # corpus size is quantizer-style metadata: one count, inlined as a
@@ -329,16 +332,12 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tok = docs.select("doc_id", F.explode(tokens_expr("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    # tf has one row per (doc_id, term), so count(*) per term IS the
-    # document frequency -- same long the countDistinct join produced.
-    wdf = Window.partitionBy("term")
-    scored = tf.select(
+    doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    scored = tf.join(F.broadcast(doc_freq), "term").select(
         "doc_id",
         "term",
         F.round(
-            F.col("tf")
-            * F.log(F.lit(float(n_docs)) / F.count(F.lit(1)).over(wdf)),
-            6,
+            F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6
         ).alias("tfidf"),
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))

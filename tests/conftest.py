@@ -27,3 +27,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def plan_verdicts() -> dict[str, bool]:
+    """Registry entry -> cartesian-plan verdict from the oracle sweep
+    (tests/oracle_check.run_check), shared with the plan-posture test
+    so one session builds each entry's frame once."""
+    return {}

@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 over the same parquet tables, then compares row count, column names, and
 order-insensitive values (columns sorted by name, rows sorted by all
-columns).  Usage:
+columns).  Each frame's plan is also checked for cartesian and
+nested-loop joins before it is collected.  Usage:
 
     python tests/oracle_check.py [sf_dir] [query ...]
 """
@@ -22,6 +23,58 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+# deliberate broadcast cross joins against tiny, bounded sides only:
+# the fixed query set (brute-force ANN baseline), the hour-grid x
+# distinct-event-type lattice (gap-fill), the 1x1/1xT scalar combines
+# of sketch estimates with exact counts, and the single-row centroid
+# model attach (IVF + k-means)
+CARTESIAN_ALLOWED = {
+    "ann_cosine_topk_bruteforce",
+    # eval-suite-sized benchmark side broadcast against the train
+    # scan (the brute-force-baseline pattern, cross-set)
+    "semantic_decontam_audit",
+    "timeseries_gapfill_hourly",
+    "sketch_hll_merge_bound",
+    "sketch_mg_heavy_hitters",
+    "ann_ivf_topk",
+    "q11_important_parts",
+    "kmeans_embedding_buckets",
+    "dedup_semantic_representatives",  # composes kmeans_assign
+    "ann_lsh_recall_at_k",  # composes the brute-force baseline
+    # single-row COUNT(*) attach deriving the corpus-scaled LSH
+    # bucket width (workloads/dedup.py) -- broadcast 1x1, not data
+    "dedup_embedding_cosine_pairs",
+    # single-row PQ codebook model attach (the kmeans/IVF pattern)
+    "ann_pq_adc_topk",
+    "ann_ivfpq_topk",  # coarse + PQ codebook single-row attaches
+    # single-row corpus-stats (N, avgdl, df) attach for BM25 scoring
+    "text_bm25_topk",
+    # BM25 stats attach + single query-vector attach (round 5)
+    "retrieval_rrf_hybrid_topk",
+    # composes the brute-force baseline + IVF (both allowed above)
+    "ann_ivf_recall_at_k",
+    # single-row fitted-quantizer model attach (round 6): the new
+    # batch maps against ONE broadcast array<struct> centroid value
+    "ann_ivf_incremental_assign",
+    # single-row total-token-count attach for the e*N/W width bound
+    # (the Q11 global-total pattern; the sketch side is <= D*W rows)
+    "sketch_cms_point_queries",
+    # round 7: 1-row weight-total / min attach over the per-source
+    # aggregate (rows == number of sources)
+    "corpus_temperature_weights",
+    # round 7: theta / exact-count scalar attaches over <= types*K
+    # retained sketch hashes -- every cross side is a 1-row aggregate
+    "sketch_kmv_theta_setops",
+    # round 7: composes the brute-force baseline (allowed above) and
+    # its own broadcast fixed query set for the truncated side
+    "ann_matryoshka_truncation_recall",
+    # round 10: the same single-row frozen-quantizer model attach as
+    # ann_ivf_topk / ann_ivf_incremental_assign, read back from the
+    # committed snapshot table (broadcast 1x1, never data x data)
+    "ann_ivf_persisted_index",
+    "ann_ivf_drift_monitor",
+}
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -98,14 +151,23 @@ def compare(name: str, sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
 
 
 def run_check(
-    spark, sf_dir: str, only: set[str] | None = None, verbose: bool = True
+    spark,
+    sf_dir: str,
+    only: set[str] | None = None,
+    verbose: bool = True,
+    plan_verdicts: dict[str, bool] | None = None,
 ) -> tuple[list[str], list[str], list[str]]:
     """Run the side-by-side comparison; returns (passed, failed, rows_only).
 
     Importable (tests/test_full_registry_oracle.py wraps it over the
     whole registry) as well as CLI-driven via :func:`main`.
+    ``plan_verdicts``, when given, receives entry -> True for each built
+    frame whose plan holds a cartesian or nested-loop join outside
+    :data:`CARTESIAN_ALLOWED`.
     """
     import __spark_entry__ as entrymod
+
+    from docker_airflow_spark_minio_spark import plans
 
     def report(msg: str) -> None:
         if verbose:
@@ -119,10 +181,21 @@ def run_check(
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            df = fn(spark, sf_dir)
+            # the plan check rides the one build of the frame
+            cartesian = (
+                name not in CARTESIAN_ALLOWED and plans.has_cartesian_product(df)
+            )
+            if plan_verdicts is not None:
+                plan_verdicts[name] = cartesian
+            sdf = df.toPandas()
         except Exception as exc:  # noqa: BLE001
             failed.append(name)
             report(f"FAIL {name}: spark raised {type(exc).__name__}: {str(exc)[:300]}")
+            continue
+        if cartesian:
+            failed.append(name)
+            report(f"FAIL {name}: cartesian/nested-loop join in its plan")
             continue
         if name not in oracles:
             rows_only.append(name)

@@ -64,6 +64,46 @@ def test_table_plan_cache_is_bounded(spark):
     assert len(base._TABLE_CACHE) <= 8
 
 
+def test_row_level_ops_release_persisted_rdds(spark, tmp_path):
+    """merge_into, update_where, delete_where (both approaches) and a
+    sidecar stats commit release everything they persist before they
+    return -- an explicit unpersist, so no GC timing is involved."""
+    from pyspark.sql import functions as F
+
+    from docker_airflow_spark_minio_spark.snapshots import SnapshotStore
+
+    schema = "id INT, amt INT, part STRING"
+    s = SnapshotStore(spark, str(tmp_path / "t"))
+    baseline = _n_persisted(spark)
+    src = spark.createDataFrame([(1, 100, "p1"), (99, 9, "p0")], schema)
+    ops = {
+        "sidecar stats commit": lambda: s.write(
+            spark.createDataFrame(
+                [(i, i, f"p{i % 3}") for i in range(30)], schema
+            ),
+            mode="snapshot",
+            partition_by=["part"],
+            stats_cols=["amt"],
+            stats_sidecar_threshold=0,
+        ),
+        "merge_into": lambda: s.merge_into(
+            src,
+            on="target.id = source.id",
+            matched=[("update", None, {"amt": "source.amt"})],
+            not_matched=[("insert", None, None)],
+        ),
+        "update_where": lambda: s.update_where(F.col("id") == 2, {"amt": 0}),
+        "delete_where mor": lambda: s.delete_where(F.col("id") == 3),
+        "delete_where cow": lambda: s.delete_where(
+            F.col("id") == 4, approach="cow"
+        ),
+    }
+    for name, op in ops.items():
+        assert op() is not None, name
+        assert _n_persisted(spark) == baseline, name
+    assert s.read().count() == 29
+
+
 def test_parquet_plan_memo_threaded_get_evict(spark, tmp_path, monkeypatch):
     """The session-wide relation memo is read, LRU-bumped, evicted and
     cleared from several threads at once (a threaded harness plus

@@ -6,7 +6,10 @@ never been driver-checked as of round 3).  Running the full side-by-side
 comparison at sf0.001 (~100 s on local[8]) closes that hole: an entry
 that breaks fails CI immediately, not two rounds later.
 
-Set SPARK_GRAFT_SKIP_FULL_ORACLE=1 to skip during quick iteration.
+Each frame's plan is checked for cartesian joins before it is collected;
+test_plans_dates_pipeline reuses those verdicts.  Set
+SPARK_GRAFT_SKIP_FULL_ORACLE=1 to skip during quick iteration (the plan
+test then builds every frame for its plan alone).
 """
 
 from __future__ import annotations
@@ -27,8 +30,10 @@ FULL_SF_DIR = "/root/testdata/sf0.001"
     os.environ.get("SPARK_GRAFT_SKIP_FULL_ORACLE") == "1",
     reason="explicitly skipped for quick iteration",
 )
-def test_full_registry_matches_oracles(spark):
-    passed, failed, rows_only = run_check(spark, FULL_SF_DIR, verbose=False)
+def test_full_registry_matches_oracles(spark, plan_verdicts):
+    passed, failed, rows_only = run_check(
+        spark, FULL_SF_DIR, verbose=False, plan_verdicts=plan_verdicts
+    )
     assert not failed, f"oracle mismatches: {failed}"
     # Every entry must be REACHED (passed or deliberately rows-only);
     # a silently empty registry would otherwise vacuously pass.

@@ -153,25 +153,32 @@ def test_merge_into_first_match_wins_and_noop(spark, tmp_path):
 
 
 def test_merge_into_cardinality_violation(spark, tmp_path):
-    s = _base(spark, tmp_path)
-    dup = spark.createDataFrame(
-        [(2, "p", 1.0, "x"), (2, "q", 2.0, "x")], SCHEMA
-    )
-    with pytest.raises(ValueError, match="cardinality"):
-        s.merge_into(
+    # the duplicate matches alone, and beside insert rows
+    for inserts in ([], [(8, "h", 8.0, "x"), (9, "i", 9.0, "w")]):
+        s = _base(spark, tmp_path / str(len(inserts)))
+        dup = spark.createDataFrame(
+            [(2, "p", 1.0, "x"), (2, "q", 2.0, "x")] + inserts, SCHEMA
+        )
+        ins = [("insert", None, None)] if inserts else []
+        with pytest.raises(ValueError, match="cardinality"):
+            s.merge_into(
+                dup,
+                on="target.id = source.id",
+                matched=[("update", None, {"price": "source.price"})],
+                not_matched=ins,
+            )
+        assert s.current_version() == 0
+        # disabled: applies nondeterministically but does not raise
+        v = s.merge_into(
             dup,
             on="target.id = source.id",
-            matched=[("update", None, {"price": "source.price"})],
+            matched=[("delete", None)],
+            not_matched=ins,
+            validate_cardinality=False,
         )
-    # disabled: applies nondeterministically but does not raise
-    v = s.merge_into(
-        dup,
-        on="target.id = source.id",
-        matched=[("delete", None)],
-        validate_cardinality=False,
-    )
-    assert v is not None
-    assert 2 not in [r[0] for r in _rows(s)]
+        assert v is not None
+        ids = [r[0] for r in _rows(s)]
+        assert ids == sorted([1, 3, 4] + [r[0] for r in inserts])
 
 
 def test_merge_into_refusals(spark, tmp_path):
@@ -225,31 +232,40 @@ def test_merge_into_unpartitioned(spark, tmp_path):
 
 
 def test_merge_into_hidden_partitioning(spark, tmp_path):
-    s = SnapshotStore(spark, str(tmp_path / "h"))
-    s.write(
-        spark.createDataFrame(
-            [(1, "a", 10.0, "x"), (2, "b", 20.0, "x")], SCHEMA
-        ),
-        mode="snapshot",
-        partition_by=["bucket(4, id)"],
-    )
-    src = spark.createDataFrame(
-        [(2, "B", 99.0, "x"), (7, "g", 70.0, "z")], SCHEMA
-    )
-    v = s.merge_into(
-        src,
-        on="target.id = source.id",
-        matched=[
-            ("update", None, {"name": "source.name", "price": "source.price"})
-        ],
-        not_matched=[("insert", None, None)],
-    )
-    assert v == 1
-    assert _rows(s) == [
-        (1, "a", 10.0, "x"),
-        (2, "B", 99.0, "x"),
-        (7, "g", 70.0, "z"),
-    ]
+    # bucket(4, id): 1 -> 1, 2 -> 2, 7 -> 3, 10 -> 2 -- the insert lands
+    # in a new bucket, or in the bucket the matched row already touched
+    for new_id, n_parts in ((7, 3), (10, 2)):
+        s = SnapshotStore(spark, str(tmp_path / f"h{new_id}"))
+        s.write(
+            spark.createDataFrame(
+                [(1, "a", 10.0, "x"), (2, "b", 20.0, "x")], SCHEMA
+            ),
+            mode="snapshot",
+            partition_by=["bucket(4, id)"],
+        )
+        src = spark.createDataFrame(
+            [(2, "B", 99.0, "x"), (new_id, "g", 70.0, "z")], SCHEMA
+        )
+        v = s.merge_into(
+            src,
+            on="target.id = source.id",
+            matched=[
+                ("update", None, {"name": "source.name", "price": "source.price"})
+            ],
+            not_matched=[("insert", None, None)],
+        )
+        assert v == 1
+        assert _rows(s) == [
+            (1, "a", 10.0, "x"),
+            (2, "B", 99.0, "x"),
+            (new_id, "g", 70.0, "z"),
+        ]
+        parts = s._read_manifest(v)["partitions"]
+        assert len(parts) == n_parts
+        # the untouched bucket keeps its original data dir
+        assert parts["id_bucket_4=1"] == s._read_manifest(0)["partitions"][
+            "id_bucket_4=1"
+        ]
     # transform source column cannot be assigned
     with pytest.raises(ValueError, match="transform sources"):
         s.merge_into(
@@ -257,6 +273,82 @@ def test_merge_into_hidden_partitioning(spark, tmp_path):
             on="target.id = source.id",
             matched=[("update", None, {"id": "source.id"})],
         )
+
+
+def _last_execution_id(spark) -> int:
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    tail = store.executionsList(max(0, n - 1), 1)
+    return tail.apply(0).executionId() if tail.size() else -1
+
+
+def _root_executions_since(spark, last_id: int) -> int:
+    """SQL executions started after ``last_id`` that are actions of their
+    own (sub-executions share their root's id); the status store keeps
+    the newest ones when it evicts."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    tail = store.executionsList(max(0, n - 50), 50)
+    ids = [tail.apply(i) for i in range(tail.size())]
+    return sum(
+        1
+        for e in ids
+        if e.executionId() > last_id and e.rootExecutionId() == e.executionId()
+    )
+
+
+@pytest.mark.parametrize(
+    "clauses, ids, rewritten",
+    [
+        (
+            dict(matched=[("update", None, {"price": "source.price"})]),
+            [1, 2, 3, 4],
+            {"x"},
+        ),
+        (
+            dict(
+                matched=[("update", None, {"price": "source.price"})],
+                not_matched_by_source=[("delete", "target.id = 4")],
+            ),
+            [1, 2, 3],
+            {"x", "y"},
+        ),
+        (dict(not_matched=[("insert", None, None)]), [1, 2, 3, 4, 5], {"z"}),
+        (
+            dict(
+                matched=[("delete", None)],
+                not_matched=[("insert", None, None)],
+                not_matched_by_source=[("update", None, {"name": "'s'"})],
+            ),
+            [1, 3, 4, 5],
+            {"x", "y", "z"},
+        ),
+        (
+            dict(
+                not_matched=[("insert", None, None)],
+                not_matched_by_source=[("delete", "target.id = 4")],
+            ),
+            [1, 2, 3, 5],
+            {"y", "z"},
+        ),
+    ],
+    ids=["inner", "left", "right", "full", "full-no-matched-clause"],
+)
+def test_merge_into_runs_two_actions(spark, tmp_path, clauses, ids, rewritten):
+    """Whatever join its clauses need, a merge is two Spark actions:
+    the probe and the commit's write.  It rewrites only the partitions
+    a clause changes: one holding matched rows but no change is read
+    for the insert test and keeps its data dir."""
+    s = _base(spark, tmp_path)
+    src = spark.createDataFrame(
+        [(2, "B", 99.0, "x"), (5, "e", 50.0, "z")], SCHEMA
+    )
+    before = _last_execution_id(spark)
+    assert s.merge_into(src, on="target.id = source.id", **clauses) == 1
+    assert _root_executions_since(spark, before) <= 2
+    assert [r[0] for r in _rows(s)] == ids
+    old, new = (s._read_manifest(v)["partitions"] for v in (0, 1))
+    assert {p[len("part="):] for p in new if new[p] != old.get(p)} == rewritten
 
 
 # -- concurrency: the require_parent_v pin -----------------------------------
@@ -438,27 +530,39 @@ def test_sql_merge_case_when_in_clauses(spark, tmp_path):
 
 def test_merge_into_not_matched_by_source(spark, tmp_path):
     """WHEN NOT MATCHED BY SOURCE clauses apply to target rows with no
-    source match -- the full-sync MERGE shape."""
-    s = _base(spark, tmp_path)
-    src = spark.createDataFrame(
-        [(2, "B", 99.0, "x"), (5, "e", 50.0, "z")], SCHEMA
-    )
-    v = s.merge_into(
-        src,
-        on="target.id = source.id",
-        matched=[("update", None, {"price": "source.price"})],
-        not_matched=[("insert", None, None)],
-        not_matched_by_source=[
-            ("update", "target.id = 1", {"name": F.lit("stale")}),
-            ("delete", None),
-        ],
-    )
-    assert v == 1
-    rows = {r[0]: r for r in _rows(s)}
-    assert rows[2][2] == 99.0       # matched update
-    assert 5 in rows                # insert
-    assert rows[1][1] == "stale"    # by-source first clause
-    assert 3 not in rows and 4 not in rows  # by-source delete (rest)
+    source match -- the full-sync MERGE shape -- on a partitioned and an
+    unpartitioned table."""
+    for partition_by in (["part"], None):
+        s = _store(
+            spark,
+            tmp_path / str(bool(partition_by)),
+            [
+                (1, "a", 10.0, "x"),
+                (2, "b", 20.0, "x"),
+                (3, "c", 30.0, "y"),
+                (4, "d", 40.0, "y"),
+            ],
+            partition_by=partition_by,
+        )
+        src = spark.createDataFrame(
+            [(2, "B", 99.0, "x"), (5, "e", 50.0, "z")], SCHEMA
+        )
+        v = s.merge_into(
+            src,
+            on="target.id = source.id",
+            matched=[("update", None, {"price": "source.price"})],
+            not_matched=[("insert", None, None)],
+            not_matched_by_source=[
+                ("update", "target.id = 1", {"name": F.lit("stale")}),
+                ("delete", None),
+            ],
+        )
+        assert v == 1
+        rows = {r[0]: r for r in _rows(s)}
+        assert rows[2][2] == 99.0       # matched update
+        assert 5 in rows                # insert
+        assert rows[1][1] == "stale"    # by-source first clause
+        assert 3 not in rows and 4 not in rows  # by-source delete (rest)
 
 
 def test_sql_merge_not_matched_by_source(spark, tmp_path):
